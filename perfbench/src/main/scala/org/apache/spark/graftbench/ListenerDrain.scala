@@ -1,0 +1,10 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until the listener bus has delivered every posted event, so
+  * counters read afterwards are complete. The bus is private to Spark.
+  */
+object ListenerDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
