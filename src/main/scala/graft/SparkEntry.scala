@@ -169,12 +169,12 @@ object SparkEntry {
     }),
 
     // J7/T4: packed block-max WAND path, end-to-end (build packed index,
-    // query via the doc-sharded WAND kernel, merge per-shard top-k). Same
-    // oracle as q_bm25_topk — proves the physical path is rank-identical.
-    // Routed through the strategy-planned operator (Bm25TopKPlan ->
-    // Bm25Strategy -> Bm25TopKExec) so the custom LogicalPlan/SparkStrategy
-    // surface is driver-exercised, not just unit-tested; Bm25PlanSpec proves
-    // it bit-identical to Wand.search.
+    // query via the doc-sharded WAND kernel, rank the per-task top-k
+    // candidates). Same oracle as q_bm25_topk — proves the physical path is
+    // rank-identical. Planned through the custom LogicalPlan/SparkStrategy
+    // (Bm25TopKPlan -> Bm25Strategy -> Bm25TopKExec, whose rows are
+    // Wand.candidates) so that surface runs in a contract query; Bm25PlanSpec
+    // proves it bit-identical to Wand.search.
     "q_bm25_wand_topk" -> ((s, dir) => wandContractTopK(s, dir) { idx =>
       graft.plans.Bm25TopKPlan.search(s, idx, contractQueryBatch, k = 200)
     }),

@@ -8,7 +8,7 @@ import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
 /** Persisted packed posting-list row: all blocks of one term within one
   * doc-shard. Doc-partitioned (shard = doc_id >> shardBits) so a WAND task
   * holds EVERY query term's postings for its doc range — the standard
-  * web-search sharding; per-shard top-k heaps then merge globally
+  * web-search sharding; per-task top-k heaps then merge globally
   * (reference analogue: faiss shard search + ResultHeap merge,
   * `/root/reference/src/retrievals/models/retrieval_auto.py:335-347`).
   */
@@ -21,7 +21,15 @@ final case class PackedBlock(
 }
 
 final case class PackedPostings(shard: Int, term: String, nPostings: Long,
-                                blocks: Array[PackedBlock])
+                                blocks: Array[PackedBlock]) extends ShardTermRow
+
+/** A posting-table row keyed by (shard, term): what
+  * [[PackedIndex.colocateShards]] and [[PackedIndex.shardGroups]] need.
+  */
+trait ShardTermRow {
+  def shard: Int
+  def term: String
+}
 
 /** Corpus-level stats persisted with the index (tiny JSON sidecar). */
 final case class IndexStats(
@@ -470,16 +478,6 @@ object PackedIndex {
     man
   }
 
-  /** The dense doc-id high-water mark (next free doc id) — the authoritative
-    * value for docId offsetting and append retries. Normally the sum of
-    * manifest docs (stats.json may be mid-commit after a crash; manifests
-    * are the commit markers), but a COMPACTED index carries fewer docs than
-    * its highest surviving id + 1, so compact() persists the original
-    * watermark in watermark.json and it takes precedence: appends after a
-    * compaction must keep allocating ABOVE the old ids (deleted ids are
-    * never reused — a reused id would resurrect under stale external
-    * references).
-    */
   /** Upper bound on the index's distinct shard count, from the id
     * watermark: ids are dense in [0, committedDocs), so shard =
     * doc_id >> shardBits never exceeds this. Query/pack stages keyed on
@@ -493,6 +491,49 @@ object PackedIndex {
     (math.max(math.max(docs, 1L) - 1, 0L) >> bits).toInt + 1
   }
 
+  /** Shard co-location for the serving kernels (WAND and positional):
+    * repartition matched rows on `shard` so each task holds whole
+    * doc-shards, sorted by (shard, term) so [[shardGroups]] streams them in
+    * one pass. Explicit partition count: the kernel stage is compute-bound
+    * per shard group, not bytes-bound — AQE's byte-based coalescing would
+    * pack the (small, compressed) matched postings into a handful of long
+    * serial tasks, and a user-specified repartition is exempt from it.
+    * Capped at [[numShardsBound]]: partitions beyond the distinct-shard
+    * count never receive rows.
+    */
+  def colocateShards[T <: ShardTermRow](rows: Dataset[T], dir: String,
+                                        meta: MetaIO = LocalMetaIO): Dataset[T] = {
+    val parts = math.max(1, math.min(
+      rows.sparkSession.sparkContext.defaultParallelism * 4,
+      numShardsBound(dir, meta)))
+    rows.repartition(parts, col("shard"))
+      .sortWithinPartitions(col("shard"), col("term"))
+  }
+
+  /** One [[colocateShards]] partition as its whole shard groups, in order. */
+  def shardGroups[T <: ShardTermRow](rows: Iterator[T]): Iterator[Seq[T]] = {
+    val buf = rows.buffered
+    new Iterator[Seq[T]] {
+      def hasNext: Boolean = buf.hasNext
+      def next(): Seq[T] = {
+        val shard = buf.head.shard
+        val group = Vector.newBuilder[T]
+        while (buf.hasNext && buf.head.shard == shard) group += buf.next()
+        group.result()
+      }
+    }
+  }
+
+  /** The dense doc-id high-water mark (next free doc id) — the authoritative
+    * value for docId offsetting and append retries. Normally the sum of
+    * manifest docs (stats.json may be mid-commit after a crash; manifests
+    * are the commit markers), but a COMPACTED index carries fewer docs than
+    * its highest surviving id + 1, so compact() persists the original
+    * watermark in watermark.json and it takes precedence: appends after a
+    * compaction must keep allocating ABOVE the old ids (deleted ids are
+    * never reused — a reused id would resurrect under stale external
+    * references).
+    */
   def committedDocs(dir: String, meta: MetaIO = LocalMetaIO): Long = {
     val wm = s"$dir/watermark.json"
     if (meta.exists(wm))

@@ -15,7 +15,7 @@ final case class PackedPosBlock(
 }
 
 final case class PosPostings(shard: Int, term: String, nPostings: Long,
-                             blocks: Array[PackedPosBlock])
+                             blocks: Array[PackedPosBlock]) extends ShardTermRow
 
 /** Optional POSITIONAL arm of the packed index: per-posting term-occurrence
   * offsets, stored as a parallel `positions/` table under the index dir and

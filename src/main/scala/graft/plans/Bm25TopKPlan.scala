@@ -4,20 +4,20 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, LongType}
-import graft.index.{PackedIndex, PackedPostings}
 import graft.query.Wand
 
 /** Whole-operator Catalyst integration for BM25 WAND retrieval (SURVEY §4
   * item 6, the (c)-tier of the custom-operator ladder): a logical leaf node
   * planned by an injected [[Strategy]] into a physical operator whose
-  * doExecute runs the per-shard block-max WAND kernel. The node emits
-  * per-shard candidates (query_id, doc_id, score); the global top-k rank
-  * remains declarative on top, so Catalyst still owns the final exchange.
+  * doExecute runs Wand's candidate step ([[graft.query.Wand.candidates]]).
+  * The node emits those pre-rank candidates (query_id, doc_id, score), at
+  * most numTasks x k per query; Wand's rank tail stays declarative on top,
+  * so Catalyst still owns the final exchange.
   *
   * Semantics are identical to [[graft.query.Wand.search]]; this packaging
   * makes the retrieval operator a first-class plan citizen (visible in
@@ -29,9 +29,10 @@ final case class Bm25TopKPlan(indexDir: String, queries: Seq[(Long, String)],
                               // a case-class FIELD so tree copies keep exprIds
                               override val output: Seq[Attribute] = Bm25TopKPlan.schema)
     extends LeafNode {
-  override def computeStats(): org.apache.spark.sql.catalyst.plans.logical.Statistics =
-    org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = BigInt(queries.size.toLong * k * 24))
+  // k <= 0 returns every matched doc: no size bound, so never broadcast it
+  override def computeStats(): Statistics = Statistics(sizeInBytes =
+    if (k > 0) BigInt(queries.size.toLong * k * 24)
+    else BigInt(SQLConf.get.defaultSizeInBytes))
 }
 
 object Bm25TopKPlan {
@@ -41,19 +42,14 @@ object Bm25TopKPlan {
     AttributeReference("score", DoubleType, nullable = false)())
 
   /** Public API: plan-integrated WAND search, rank-identical to
-    * Wand.search. Requires [[Bm25Strategy]] (GraftExtensions or the
-    * programmatic register below).
+    * Wand.search (`k <= 0` means all matched docs, ranked). Requires
+    * [[Bm25Strategy]] (GraftExtensions or the programmatic register below).
     */
   def search(spark: SparkSession, indexDir: String,
              queries: Seq[(Long, String)], k: Int): DataFrame = {
     registerOnce(spark)
-    val candidates = org.apache.spark.sql.graftbridge.ColumnBridge
-      .ofRows(spark, Bm25TopKPlan(indexDir, queries, k))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    candidates.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Wand.rank(org.apache.spark.sql.graftbridge.ColumnBridge
+      .ofRows(spark, Bm25TopKPlan(indexDir, queries, k)), k)
   }
 
   def registerOnce(spark: SparkSession): Unit =
@@ -72,52 +68,14 @@ object Bm25Strategy extends SparkStrategy {
   }
 }
 
-/** Physical WAND operator: scans the matched packed postings (term filter
-  * pushed to parquet), co-locates shards with an explicit-count exchange,
-  * and runs the kernel per shard group.
-  */
+/** Physical WAND operator: the rows of Wand's candidate step. */
 final case class Bm25TopKExec(indexDir: String, queries: Seq[(Long, String)],
                               k: Int,
                               override val output: Seq[Attribute])
     extends LeafExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val spark = session
-    val (stats, prepared) = Wand.prepare(spark, indexDir, queries)
-    val terms = prepared.flatMap(_.idf.keys).distinct
-    if (terms.isEmpty) return sparkContext.emptyRDD[InternalRow]
-    val bc = sparkContext.broadcast((stats, prepared))
-    val tomb = PackedIndex.loadTombstones(indexDir)
-    val bcDenied = sparkContext.broadcast(if (tomb.isEmpty) null else tomb)
-    val parts = math.max(sparkContext.defaultParallelism * 4, 16)
-    import spark.implicits._
-    val matched = PackedIndex.loadPostings(spark, indexDir)
-      .filter(col("term").isin(terms: _*))
-      .as[PackedPostings]
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-    matched.rdd.mapPartitions { it =>
-      val (st, qs) = bc.value
-      val buf = it.buffered
-      val groups = new Iterator[Iterator[Wand.Hit]] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): Iterator[Wand.Hit] = {
-          val shard = buf.head.shard
-          val rows = scala.collection.mutable.ArrayBuffer.empty[PackedPostings]
-          while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-          Wand.shardSearch(rows.iterator, qs, st, k, denied = bcDenied.value)
-        }
-      }.flatten
-      // downstream operators expect UnsafeRow; project per partition
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(Bm25TopKPlan.schema.map(_.dataType).toArray)
-      val scratch = new GenericInternalRow(3)
-      groups.map { h =>
-        scratch.setLong(0, h.query_id)
-        scratch.setLong(1, h.doc_id)
-        scratch.setDouble(2, h.score)
-        proj.apply(scratch).copy().asInstanceOf[InternalRow]
-      }
-    }
+    val (stats, prepared) = Wand.prepare(session, indexDir, queries)
+    Wand.candidates(session, indexDir, stats, prepared, k).queryExecution.toRdd
   }
 }

@@ -404,10 +404,11 @@ object Phrase {
     *
     * Scale shape (flat in batch size, like the WAND batch kernel): the
     * UNION of the batch's terms is pulled with one pushed-down IN filter
-    * and one shard repartition; per shard every term is decoded ONCE and
-    * shared by all queries touching it; per (shard, query) a k-bounded
-    * heap emits at most k rows, so the final per-query rank window sees
-    * <= shards x k rows — matched-doc counts never materialize globally.
+    * and co-located by [[graft.index.PackedIndex.colocateShards]]; per
+    * shard every term is decoded ONCE and shared by all queries touching
+    * it; per (task, query) one k-bounded heap emits at most k rows, so the
+    * shared rank tail ([[Wand.rank]]) sees <= numTasks x k rows per query —
+    * matched-doc counts never materialize globally.
     */
   def search(spark: org.apache.spark.sql.SparkSession, indexDir: String,
              queries: Seq[(Long, PositionalQuery)], k: Int,
@@ -415,9 +416,7 @@ object Phrase {
              meta: graft.io.MetaIO = graft.io.LocalMetaIO): DataFrame = {
     import spark.implicits._
     require(k > 0, "Phrase.search: k must be > 0")
-    def empty = spark.emptyDataset[(Long, Long, Double)]
-      .toDF("query_id", "doc_id", "score")
-      .withColumn("rank", lit(1)).limit(0)
+    def empty = Wand.rank(Wand.noCandidates(spark), k)
     if (queries.isEmpty) return empty
     val allTerms = queries.flatMap(_._2.slotTerms).distinct
     val (posRows, dfCounts) = loadGated(spark, indexDir, allTerms, io, meta)
@@ -428,53 +427,32 @@ object Phrase {
     val tomb = graft.index.PackedIndex.loadTombstones(indexDir, meta)
     val bcTomb = spark.sparkContext.broadcast(tomb)
     val bcQueries = spark.sparkContext.broadcast(live)
-    // capped at the shard count — see Wand.searchPrepared (r7)
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      graft.index.PackedIndex.numShardsBound(indexDir, meta)), 1)
-    val hits = posRows
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
+    val hits = graft.index.PackedIndex.colocateShards(posRows, indexDir, meta)
       .mapPartitions { it =>
         val qs = bcQueries.value
         val tombArr = bcTomb.value
         // ONE bounded heap per query for the whole task (all its shard
-        // groups) — the global rank receives numTasks x k rows per query
-        // instead of numShards x k, mirroring the WAND kernel's r7
-        // task-level merge; results identical (a doc in the global top-k
-        // is in every covering subset's top-k, same tie order)
-        val heaps = new Array[BoundedCountHeap](qs.length)
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val shard = buf.head.shard
-          val rows = scala.collection.mutable.ArrayBuffer.empty[graft.index.PosPostings]
-          while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-          val decoded = decodeShard(rows.toSeq)
+        // groups), the WAND kernel's task-level merge; counts are exact
+        // integers in a double, so (score desc, doc asc) is (count desc,
+        // doc asc)
+        val heaps = new Array[Wand.TopKHeap](qs.length)
+        graft.index.PackedIndex.shardGroups(it).foreach { rows =>
+          val decoded = decodeShard(rows)
           var qi = 0
           while (qi < qs.length) {
             val (_, pq) = qs(qi)
             val matches = intersectCounts(decoded, pq.slotTerms.toArray,
               tombArr, pq.kernel)
             if (matches.hasNext) {
-              if (heaps(qi) == null) heaps(qi) = new BoundedCountHeap(k)
-              matches.foreach { case (doc, cnt) => heaps(qi).offer(doc, cnt) }
+              if (heaps(qi) == null) heaps(qi) = new Wand.TopKHeap(k)
+              matches.foreach { case (doc, cnt) => heaps(qi).offer(cnt.toDouble, doc) }
             }
             qi += 1
           }
         }
-        qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-          val h = heaps(qi)
-          if (h == null) Iterator.empty
-          else h.drain().map { case (doc, cnt) => (qid, doc, cnt) }
-        }
+        Wand.drainHeaps(qs.map(_._1).toSeq, heaps)
       }
-      .toDF("query_id", "doc_id", "cnt")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cnt").desc, col("doc_id").asc)
-    hits.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"),
-        col("cnt").cast("double").as("score"), col("rank"))
+    Wand.rank(hits.toDF(), k)
   }
 
   /** Dataset-typed positional query batch: (query_id, text) rows parsed by
@@ -494,24 +472,6 @@ object Phrase {
       search(spark, indexDir,
         chunk.map { case (id, text) => id -> mode.parse(text) }, k, io, meta)
     }
-
-  /** Bounded top-k accumulator by (count desc, doc_id asc) — the per-query
-    * task-level heap that keeps the batch path's global rank input at
-    * <= numTasks x k rows per query (see the r7 merge note in [[search]]).
-    */
-  private[query] final class BoundedCountHeap(k: Int) {
-    // worst-first ordering: head = smallest count, then largest doc_id
-    private val ord = Ordering.by[(Long, Long), (Long, Long)] {
-      case (doc, cnt) => (-cnt, doc)
-    }
-    private val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long)](ord)
-    def offer(doc: Long, cnt: Long): Unit = {
-      val e = (doc, cnt)
-      if (heap.size < k) heap.enqueue(e)
-      else if (ord.lt(e, heap.head)) { heap.dequeue(); heap.enqueue(e) }
-    }
-    def drain(): Iterator[(Long, Long)] = heap.iterator
-  }
 
   /** Shared positional-kernel plumbing for phrase/proximity top-k:
     * staleness gate, pushed-down term filter, shard-local doc-list
@@ -536,23 +496,11 @@ object Phrase {
     val tomb = graft.index.PackedIndex.loadTombstones(indexDir, meta)
     val bcTomb = spark.sparkContext.broadcast(tomb)
     val bcSlots = spark.sparkContext.broadcast(slotTerms.toArray)
-    // capped at the shard count — see Wand.searchPrepared (r7)
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      graft.index.PackedIndex.numShardsBound(indexDir, meta)), 1)
-    val counted = posRows
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
+    val counted = graft.index.PackedIndex.colocateShards(posRows, indexDir, meta)
       .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[Iterator[(Long, Long)]] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[(Long, Long)] = {
-            val shard = buf.head.shard
-            val rows = scala.collection.mutable.ArrayBuffer.empty[graft.index.PosPostings]
-            while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-            shardSlotCounts(rows.toSeq, bcSlots.value, bcTomb.value, countFn)
-          }
-        }.flatten
+        graft.index.PackedIndex.shardGroups(it).flatMap { rows =>
+          shardSlotCounts(rows, bcSlots.value, bcTomb.value, countFn)
+        }
       }
       .toDF("doc_id", countCol)
       .filter(col(countCol) > 0)

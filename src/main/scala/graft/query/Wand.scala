@@ -7,14 +7,18 @@ import graft.index.{IndexStats, PackedBlock, PackedIndex, PackedPostings}
 
 /** Block-max WAND top-k over the packed, doc-sharded index.
   *
-  * Physical plan:
-  *   packed postings scan, `term IN (query terms)` pushed to parquet
-  *     -> groupByKey(shard)  (shuffle proportional to the MATCHED postings
-  *        only, guaranteeing every query term of a doc range is co-located
-  *        even if file splits would have torn a shard apart)
-  *     -> flatMapGroups: per-shard DAAT WAND with per-list and per-block
-  *        upper bounds, one bounded heap per (query, shard)
-  *     -> per-query global rank over numShards*k candidate rows (tiny).
+  * The one WAND serving path, in two steps shared by [[search]],
+  * [[searchDs]] and the Catalyst operator ([[graft.plans.Bm25TopKPlan]]):
+  *   candidate step ([[candidates]]):
+  *     packed postings scan, `term IN (query terms)` pushed to parquet
+  *     -> [[PackedIndex.colocateShards]] (shuffle proportional to the
+  *        MATCHED postings only; every query term of a doc-shard lands in
+  *        one task even if file splits would have torn the shard apart)
+  *     -> per task, DAAT WAND over each shard group with per-list and
+  *        per-block upper bounds, into ONE bounded heap per query for the
+  *        whole task, so every shard the task holds prunes against the same
+  *        threshold; emits <= numTasks x k (query_id, doc_id, score) rows
+  *   rank tail ([[rank]]): per-query row_number window over those rows.
   *
   * Rank/score parity with the exhaustive reference semantics
   * (`/root/reference/src/retrievals/models/retrieval_auto.py:391-393`) is
@@ -125,7 +129,7 @@ object Wand {
     (stats, prepared)
   }
 
-  /** Distributed search: per-shard WAND + global rank. Returns
+  /** Distributed search: [[candidates]] + [[rank]]. Returns
     * (query_id, doc_id, score, rank), rank 1..k. `k <= 0` means "all matched
     * docs, ranked" — consistent with [[graft.core.Bm25]]'s oracle topK.
     *
@@ -139,8 +143,8 @@ object Wand {
     * (bounds remain valid upper bounds). Suited to selective filters (the
     * list must fit in a broadcast); a non-selective filter should instead
     * pre-restrict the corpus at index-build time.
-    */
-  /** @param minShouldMatch Elasticsearch `minimum_should_match` semantics:
+    *
+    * @param minShouldMatch Elasticsearch `minimum_should_match` semantics:
     *        only docs matching at least this many DISTINCT query terms may
     *        enter the heap (1 = plain disjunctive retrieval; |terms| =
     *        conjunctive AND). Scoring of qualifying docs is unchanged —
@@ -170,14 +174,28 @@ object Wand {
                                     prepared: Seq[PreparedQuery], k: Int,
                                     allowedDocs: Option[Array[Long]] = None,
                                     meta: graft.io.MetaIO = graft.io.LocalMetaIO,
-                                    minShouldMatch: Int = 1): DataFrame = {
+                                    minShouldMatch: Int = 1): DataFrame =
+    rank(candidates(spark, indexDir, stats, prepared, k, allowedDocs, meta,
+      minShouldMatch), k)
+
+  /** Candidate step: the prepared batch's matched postings (term-filtered
+    * scan), co-located by shard, through [[taskTopK]]. Returns pre-rank
+    * (query_id, doc_id, score) rows, at most numTasks x k per query; the
+    * k best of each query are among them, which [[rank]] selects.
+    */
+  private[graft] def candidates(spark: SparkSession, indexDir: String,
+                                stats: IndexStats,
+                                prepared: Seq[PreparedQuery], k: Int,
+                                allowedDocs: Option[Array[Long]] = None,
+                                meta: graft.io.MetaIO = graft.io.LocalMetaIO,
+                                minShouldMatch: Int = 1): DataFrame = {
     // must_not terms join the pushed-down posting scan: their lists feed
     // per-query exclusion cursors in the shard kernel (no scoring cursors —
     // only positive terms carry idf entries)
     val terms =
       (prepared.flatMap(_.idf.keys) ++ prepared.flatMap(_.mustNot)).distinct
     import spark.implicits._
-    if (terms.isEmpty) return emptyHits(spark)
+    if (terms.isEmpty) return noCandidates(spark)
     val postings = PackedIndex.loadPostings(spark, indexDir, meta = meta)
     val matched =
       (if (terms.size <= IsinThreshold)
@@ -186,76 +204,58 @@ object Wand {
         postings.join(broadcast(terms.toDF("term")), "term"))
         .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
         .as[PackedPostings]
-    val grouped = shardPartitioned(spark, indexDir, matched, meta)
-    val tomb = PackedIndex.loadTombstones(indexDir, meta)
-    kernelRank(spark, grouped, stats, prepared, k, allowedDocs, tomb,
-      minShouldMatch)
+    taskTopK(spark, PackedIndex.colocateShards(matched, indexDir, meta),
+      stats, prepared, k, allowedDocs,
+      PackedIndex.loadTombstones(indexDir, meta), minShouldMatch)
   }
 
-  private def emptyHits(spark: SparkSession): DataFrame = {
+  private[query] def noCandidates(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    spark.emptyDataset[Hit].toDF().withColumn("rank", lit(1)).limit(0)
+    spark.emptyDataset[Hit].toDF()
   }
 
-  /** Repartition matched postings so each task holds whole doc-shards.
-    * Explicit partition count: the WAND stage is compute-bound per shard
-    * group, not bytes-bound — AQE's byte-based coalescing would pack the
-    * (small, compressed) matched postings into a handful of long serial
-    * tasks. A user-specified repartition is exempt from AQE coalescing;
-    * sortWithinPartitions then lets one streaming pass group by shard.
-    * Capped at the index's shard count (hash-on-shard cannot use more
-    * partitions than distinct shards — the excess was empty tasks, r7).
+  /** Per-task WAND over an ALREADY shard-co-located postings dataset:
+    * ONE heap per query for the whole task (all its shard groups), so
+    * emissions are numTasks x k per query, not numShards x k (r7; at the 2M
+    * scale point 9.8M -> ~0.6M rank-input rows for a 2000-query batch).
+    * Results are identical: a doc in the global top-k is in every covering
+    * subset's top-k, and the heap's (score desc, doc asc) order is exactly
+    * the rank window's. [[searchDs]] hands the SAME cached co-located
+    * dataset to every chunk so the scan+shuffle runs once per batch, not
+    * per chunk; results are independent of any extra terms present in the
+    * rows (cursors exist only for each query's own terms).
     */
-  private def shardPartitioned(spark: SparkSession, indexDir: String,
-                               matched: Dataset[PackedPostings],
-                               meta: graft.io.MetaIO): Dataset[PackedPostings] = {
-    val parts = math.max(math.min(spark.sparkContext.defaultParallelism * 4,
-      PackedIndex.numShardsBound(indexDir, meta)), 1)
-    matched
-      .repartition(parts, col("shard"))
-      .sortWithinPartitions(col("shard"), col("term"))
-  }
-
-  /** Per-shard WAND kernel + per-query global rank over an ALREADY
-    * shard-partitioned postings dataset — the tail every serving path
-    * shares; [[searchDs]] hands the SAME cached partitioned dataset to
-    * every chunk so the scan+shuffle runs once per batch, not per chunk.
-    * Results are independent of any extra terms present in the rows
-    * (cursors exist only for each query's own terms).
-    */
-  private def kernelRank(spark: SparkSession, grouped: Dataset[PackedPostings],
-                         stats: IndexStats, prepared: Seq[PreparedQuery],
-                         k: Int, allowedDocs: Option[Array[Long]],
-                         tomb: Array[Long], minShouldMatch: Int): DataFrame = {
+  private def taskTopK(spark: SparkSession, grouped: Dataset[PackedPostings],
+                       stats: IndexStats, prepared: Seq[PreparedQuery],
+                       k: Int, allowedDocs: Option[Array[Long]],
+                       tomb: Array[Long], minShouldMatch: Int): DataFrame = {
     import spark.implicits._
     if (prepared.isEmpty || !prepared.exists(_.idf.nonEmpty))
-      return emptyHits(spark)
+      return noCandidates(spark)
     val bc = spark.sparkContext.broadcast((stats, prepared))
     val bcAllowed = spark.sparkContext.broadcast(
       allowedDocs.map(_.sorted).orNull)
     // tombstoned docs are invisible to every search (PackedIndex.delete)
     val bcDenied = spark.sparkContext.broadcast(
       if (tomb.isEmpty) null else tomb)
-    val hits: Dataset[Hit] = grouped
-      .mapPartitions { it =>
-        val (st, qs) = bc.value
-        // ONE heap per query for the WHOLE task (all its shard groups):
-        // emissions drop from numShards x k to numTasks x k per query —
-        // see shardSearchInto
-        val heaps = new Array[TopKHeap](qs.size)
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val shard = buf.head.shard
-          val rows = scala.collection.mutable.ArrayBuffer.empty[PackedPostings]
-          while (buf.hasNext && buf.head.shard == shard) rows += buf.next()
-          shardSearchInto(rows.iterator, qs, st, k, bcAllowed.value,
-            bcDenied.value, minShouldMatch, heaps)
-        }
-        drainHeaps(qs, heaps)
+    grouped.mapPartitions { it =>
+      val (st, qs) = bc.value
+      val heaps = new Array[TopKHeap](qs.size)
+      PackedIndex.shardGroups(it).foreach { rows =>
+        shardSearchInto(rows, qs, st, k, bcAllowed.value, bcDenied.value,
+          minShouldMatch, heaps)
       }
+      drainHeaps(qs.map(_.queryId), heaps)
+    }.toDF()
+  }
+
+  /** Rank tail: per-query rank 1.. by (score desc, doc_id asc) over
+    * candidate rows; `k <= 0` keeps every row.
+    */
+  private[graft] def rank(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id").asc)
-    val ranked = hits.toDF().withColumn("rank", row_number().over(w))
+    val ranked = candidates.withColumn("rank", row_number().over(w))
     if (k > 0) ranked.filter(col("rank") <= k) else ranked
   }
 
@@ -300,24 +300,21 @@ object Wand {
       .join(broadcast(allTerms), "term")
       .select(col("shard"), col("term"), col("nPostings"), col("blocks"))
       .as[PackedPostings]
-    val grouped = shardPartitioned(spark, indexDir, matched, meta)
+    val grouped = PackedIndex.colocateShards(matched, indexDir, meta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       grouped.foreachPartition((_: Iterator[PackedPostings]) => ()) // materialize once
       ChunkedServe.serve(spark, queries, chunkSize, io, stagingDir, meta,
         "searchDs") { chunk =>
         val (st, prepared) = prepare(spark, indexDir, chunk, meta, mustNot)
-        kernelRank(spark, grouped, st, prepared, k, allowedDocs, tomb,
-          minShouldMatch)
+        rank(taskTopK(spark, grouped, st, prepared, k, allowedDocs, tomb,
+          minShouldMatch), k)
       }
     } finally grouped.unpersist(false)
   }
 
   // ---- per-shard kernel ------------------------------------------------
 
-  /** Cursor over one term's packed blocks within a shard. Decodes a block
-    * lazily on first positioning inside it; skips whole blocks via maxDoc.
-    */
   /** Query-independent per-(shard,term) state shared by every query in the
     * batch: the block array plus precomputed tf-norm bounds
     * (norm(maxTf, minDl) — increasing in tf, decreasing in dl, so it bounds
@@ -381,6 +378,9 @@ object Wand {
     }
   }
 
+  /** Cursor over one term's packed blocks within a shard. Decodes a block
+    * lazily on first positioning inside it; skips whole blocks via maxDoc.
+    */
   private final class Cursor(val term: String, val idf: Double,
                              val weightedIdf: Double,
                              tp: TermPostings) {
@@ -543,41 +543,22 @@ object Wand {
     }
   }
 
-  /** WAND over one shard's matched rows for every query in the batch.
+  private[query] def drainHeaps(queryIds: Seq[Long],
+                                heaps: Array[TopKHeap]): Iterator[Hit] =
+    queryIds.iterator.zipWithIndex.flatMap { case (qid, i) =>
+      val h = heaps(i)
+      if (h == null) Iterator.empty
+      else h.drain().iterator.map { case (s, d) => Hit(qid, d, s) }
+    }
+
+  /** WAND over one shard's matched rows for every query in the batch,
+    * offering into CALLER-OWNED per-query heaps (see [[taskTopK]]).
     * A (shard, term) can appear in MULTIPLE rows when the shard spans build
     * groups (incremental appends land in new groups): their block lists
     * cover disjoint, monotone docId ranges and are concatenated in
     * baseDocId order to form one logical posting list.
     */
-  def shardSearch(rows: Iterator[PackedPostings], queries: Seq[PreparedQuery],
-                  stats: IndexStats, k: Int,
-                  allowed: Array[Long] = null,
-                  denied: Array[Long] = null,
-                  minShouldMatch: Int = 1): Iterator[Hit] = {
-    val heaps = new Array[TopKHeap](queries.size)
-    shardSearchInto(rows, queries, stats, k, allowed, denied, minShouldMatch,
-      heaps)
-    drainHeaps(queries, heaps)
-  }
-
-  private def drainHeaps(queries: Seq[PreparedQuery],
-                         heaps: Array[TopKHeap]): Iterator[Hit] =
-    queries.iterator.zipWithIndex.flatMap { case (q, i) =>
-      val h = heaps(i)
-      if (h == null) Iterator.empty
-      else h.drain().iterator.map { case (s, d) => Hit(q.queryId, d, s) }
-    }
-
-  /** [[shardSearch]] accumulating into CALLER-OWNED per-query heaps: a task
-    * holding several whole doc-shards offers every shard's candidates into
-    * one heap per query and emits once at task end — the per-query global
-    * rank then receives numTasks x k rows instead of numShards x k (r7; at
-    * the 2M scale point that is 9.8M -> ~0.6M window-input rows for a
-    * 2000-query batch). Results are identical: a doc in the global top-k is
-    * in every covering subset's top-k, and the heap's (score desc, doc asc)
-    * order is exactly the rank window's.
-    */
-  private def shardSearchInto(rows: Iterator[PackedPostings],
+  private def shardSearchInto(rows: Seq[PackedPostings],
                               queries: Seq[PreparedQuery],
                               stats: IndexStats, k: Int,
                               allowed: Array[Long],
@@ -651,12 +632,6 @@ object Wand {
     score
   }
 
-  /** Allocation-free DAAT loop: the cursor array is kept sorted in place by
-    * insertion sort (nearly-sorted between iterations), exhausted cursors
-    * are compacted in place, and no per-iteration objects are created —
-    * the earlier sortBy-per-iteration version generated enough garbage to
-    * stall 32-thread executors in GC.
-    */
   /** True iff any must_not exclusion cursor's posting list contains `doc`.
     * Cursors advance monotonically (callers evaluate docs in non-decreasing
     * order), so each list is walked at most once per query per shard.
@@ -672,6 +647,12 @@ object Wand {
     false
   }
 
+  /** Allocation-free DAAT loop: the cursor array is kept sorted in place by
+    * insertion sort (nearly-sorted between iterations), exhausted cursors
+    * are compacted in place, and no per-iteration objects are created —
+    * the earlier sortBy-per-iteration version generated enough garbage to
+    * stall 32-thread executors in GC.
+    */
   private def wandLoop(cursors: Array[Cursor], q: PreparedQuery,
                        heap: TopKHeap, stats: IndexStats,
                        allowed: Array[Long] = null,
