@@ -402,6 +402,7 @@ object IvfIndex {
       require(io.committed(s"$dir/$s"),
         s"IvfIndex.loadCells: segment $s missing/uncommitted at $dir")
     }
+    // a union, not one TableIO.readAll: segments store vec as f32 or f64
     segs.iterator
       .map(s => io.read(spark, s"$dir/$s")
         .select(col("vec_id"), col("vec").cast("array<double>").as("vec"),

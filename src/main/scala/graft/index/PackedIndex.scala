@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.Bm25Params
 import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
 
@@ -224,6 +225,8 @@ object PackedIndex {
     *
     * @param groups number of sequential commit units (shard ranges); each is
     *               an independent Spark job whose output is checkpointed.
+    *               Capped so every group holds at least one shard: a
+    *               1-shard corpus commits one group whatever the value.
     * @return per-group metrics (including skipped/resumed groups).
     */
   /** @param stageInput stage `tokenizedIn` to parquet under the index dir
@@ -301,9 +304,15 @@ object PackedIndex {
       .agg(count(lit(1)).as("docs"), sum(size(col("terms")).cast("long")).as("sum_dl"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1) }
-    val maxShard = if (perShard.isEmpty) -1 else perShard.last._1
-    val shardsPerGroup = math.max(1, (maxShard + groups) / groups) // ceil
-    def groupOf(shard: Int): Int = math.min(shard / shardsPerGroup, groups - 1)
+    // effective group count: no group without a shard (ids are dense, so
+    // every shard range holds docs) — an empty group is a whole pack job
+    // plus a committed dir and manifest that every later read lists. Derived
+    // from the perShard collect, so a resumed build recomputes the same split.
+    val nShards = if (perShard.isEmpty) 0 else perShard.last._1 + 1
+    val wanted = math.max(1, math.min(groups, nShards))
+    val shardsPerGroup = math.max(1, (nShards + wanted - 1) / wanted) // ceil
+    val nGroups = math.max(1, (nShards + shardsPerGroup - 1) / shardsPerGroup)
+    def groupOf(shard: Int): Int = math.min(shard / shardsPerGroup, nGroups - 1)
     val groupTotals: Map[Int, (Long, Long)] = perShard
       .groupBy { case (s, _, _) => groupOf(s) }
       .map { case (g, rows) => g -> (rows.map(_._2).sum, rows.map(_._3).sum) }
@@ -327,7 +336,7 @@ object PackedIndex {
         val counters = new PackCounters(spark)
         val lo = g.toLong * shardsPerGroup << shardBits
         val hi =
-          if (g == groups - 1) Long.MaxValue
+          if (g == nGroups - 1) Long.MaxValue
           else (g.toLong + 1) * shardsPerGroup << shardBits
         val groupDocs = tokenized.filter(col("doc_id") >= lo && col("doc_id") < hi)
         val nShardsInGroup = perShard.count { case (sh, _, _) => groupOf(sh) == g }
@@ -348,21 +357,22 @@ object PackedIndex {
       }
     }
     val manifests: Seq[GroupManifest] =
-      if (groups == 1) Seq(buildGroup(0))
+      if (nGroups == 1) Seq(buildGroup(0))
       else {
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(groups)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(nGroups)
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
         try Await.result(
-          Future.sequence((0 until groups).map(g => Future(buildGroup(g)))),
+          Future.sequence((0 until nGroups).map(g => Future(buildGroup(g)))),
           Duration.Inf)
         finally pool.shutdown()
       }
 
-    // stage 3: global df table from the packed rows (column-pruned scan of
-    // (term, nPostings) only — the blocks column is never read) + the
-    // deterministic epsilon floor; stats.json is the completion marker.
+    // stage 3: global df table from the committed groups' packed rows
+    // (column-pruned scan of (term, nPostings) only — the blocks column is
+    // never read) + the deterministic epsilon floor; stats.json is the
+    // completion marker.
     // n/avgdl come from the manifests (exact Long sums), never from a
     // possibly-stale stats.json.
     if (!meta.exists(s"$dir/stats.json")) {
@@ -371,8 +381,8 @@ object PackedIndex {
       // downstream BM25 division silently. An empty corpus is a caller bug.
       require(n > 0, s"PackedIndex.build: empty corpus (0 docs) at $dir")
       val avgdl = manifests.map(_.sumDl).sum.toDouble / n
-      timedStage("df write") { io.write(io.read(spark, s"$dir/postings")
-        .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/df") }
+      timedStage("df write") {
+        writeDf(readGroups(spark, dir, manifests.map(_.group), io), s"$dir/df", io) }
       val avgRawIdf = timedStage("avgRawIdf") {
         InvertedIndex.avgRawIdf(io.read(spark, s"$dir/df"), n) }
       writeStats(dir, IndexStats(n, avgdl, avgRawIdf, p.k1, p.b, p.epsilon,
@@ -451,12 +461,13 @@ object PackedIndex {
       maxShards = math.max(batchShards, 1)).toDF(),
       s"$dir/postings/grp=$nextGroup")
 
-    // recompute global df from the packed rows (column-pruned scan) into a
-    // fresh versioned dir; readers keep using the old dir until stats.json
-    // (which names the live dir) is atomically replaced
+    // recompute global df from the committed groups plus this one
+    // (column-pruned scan; an orphan grp= dir of a crashed commit is never
+    // counted) into a fresh versioned dir; readers keep using the old dir
+    // until stats.json (which names the live dir) is atomically replaced
     val newDfDir = s"df-g$nextGroup"
-    io.write(io.read(spark, s"$dir/postings")
-      .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$dir/$newDfDir")
+    writeDf(readGroups(spark, dir, manifests.map(_.group) :+ nextGroup, io),
+      s"$dir/$newDfDir", io)
     val avgRawIdf = InvertedIndex.avgRawIdf(io.read(spark, s"$dir/$newDfDir"), n)
     writeStats(dir, IndexStats(n, avgdl, avgRawIdf, old.k1, old.b, old.epsilon,
       old.shardBits, old.blockSize), dfDir = newDfDir, meta)
@@ -548,26 +559,43 @@ object PackedIndex {
         readManifest(s"$dir/manifest/$name", meta)
     }.toSeq.sortBy(_.group)
 
-  /** Read the packed postings of COMMITTED groups only. Groups are
+  /** Read the packed postings of COMMITTED groups only, as ONE parquet
+    * relation over their grp= dirs (see [[readGroups]]). Groups are
     * enumerated from the manifests (the commit markers), not by listing
     * postings/: a crash between a group's parquet write and its manifest
     * commit leaves an orphan grp=N dir, and serving it would expose
-    * uncommitted docs with stale df/stats until the append retry. Each leg
-    * is its own pushdown-filtered scan; group count is small (one per
-    * build/append commit unit), so the union is shallow.
+    * uncommitted docs with stale df/stats until the append retry. Building
+    * the relation runs no Spark job (one driver-side listing; past Spark's
+    * parallel-listing threshold of 32 dirs, one listing job), so a request's
+    * fixed cost stays flat as appends add groups; each reader's term filter
+    * is pushed into the one scan.
     */
   def loadPostings(spark: SparkSession, dir: String,
                    io: TableIO = ParquetDirIO,
                    meta: MetaIO = LocalMetaIO): Dataset[PackedPostings] = {
-    import spark.implicits._
-    val cols = Seq("shard", "term", "nPostings", "blocks")
     val committed = listManifests(dir, meta).map(_.group)
     require(committed.nonEmpty, s"loadPostings: no committed groups at $dir")
-    committed.iterator
-      .map(g => io.read(spark, s"$dir/postings/grp=$g").selectExpr(cols: _*))
-      .reduce(_ unionByName _)
+    readGroups(spark, dir, committed, io)
+  }
+
+  private val PostingsSchema: StructType = Encoders.product[PackedPostings].schema
+
+  /** The given groups' postings as one relation: the dirs are named, not
+    * discovered (no partition inference over postings/), and the schema is
+    * the [[PackedPostings]] encoder's, not inferred from parquet footers.
+    */
+  private def readGroups(spark: SparkSession, dir: String, groups: Seq[Int],
+                         io: TableIO): Dataset[PackedPostings] = {
+    import spark.implicits._
+    io.readAll(spark, groups.map(g => s"$dir/postings/grp=$g"), PostingsSchema)
       .as[PackedPostings]
   }
+
+  /** Global (term, df) table of a postings relation, written to `location`. */
+  private def writeDf(postings: Dataset[PackedPostings], location: String,
+                      io: TableIO): Unit =
+    io.write(postings.groupBy(col("term")).agg(sum(col("nPostings")).as("df")),
+      location)
 
   /** The LIVE df table — the dir named by stats.json (appends write fresh
     * versioned dirs and flip the pointer atomically with the stats).
@@ -756,8 +784,7 @@ object PackedIndex {
     }
     io.write(repacked.toDF(), s"$outDir/postings/grp=0")
 
-    io.write(io.read(spark, s"$outDir/postings")
-      .groupBy(col("term")).agg(sum(col("nPostings")).as("df")), s"$outDir/df")
+    writeDf(readGroups(spark, outDir, Seq(0), io), s"$outDir/df", io)
     val avgRawIdf2 = InvertedIndex.avgRawIdf(io.read(spark, s"$outDir/df"), n2)
     writeStats(outDir, IndexStats(n2, sumDl2.toDouble / n2, avgRawIdf2,
       stats.k1, stats.b, stats.epsilon, stats.shardBits, blockSize),

@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.io.{LocalMetaIO, MetaIO, ParquetDirIO, TableIO}
 
 /** Persisted positional posting row: all positional blocks of one term
@@ -213,8 +214,12 @@ object PositionalIndex {
     meta.writeAtomic(s"$outDir/positions.list", "positions")
   }
 
-  /** Read the positional arm (union of committed segments); fails loudly
-    * when absent.
+  private val PosSchema: StructType = Encoders.product[PosPostings].schema
+
+  /** Read the positional arm: its committed segments as ONE relation with
+    * the [[PosPostings]] schema (no inference job, no per-segment union —
+    * the same read as [[PackedIndex.loadPostings]]); fails loudly when
+    * absent.
     */
   def load(spark: SparkSession, dir: String,
            io: TableIO = ParquetDirIO,
@@ -226,10 +231,6 @@ object PositionalIndex {
         s"PositionalIndex.load: segment $s missing/uncommitted at $dir " +
           "— run PositionalIndex.build over the index corpus first")
     }
-    segs.iterator
-      .map(s => io.read(spark, s"$dir/$s")
-        .selectExpr("shard", "term", "nPostings", "blocks"))
-      .reduce(_ unionByName _)
-      .as[PosPostings]
+    io.readAll(spark, segs.map(s => s"$dir/$s"), PosSchema).as[PosPostings]
   }
 }

@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table-format boundary for every persistent artifact the engine writes
   * (staged docs, packed postings groups, df tables).
@@ -21,6 +22,17 @@ trait TableIO extends Serializable {
   def write(df: DataFrame, location: String, partitionBy: Seq[String] = Nil): Unit
 
   def read(spark: SparkSession, location: String): DataFrame
+
+  /** Read several locations of ONE table (e.g. an index's committed postings
+    * groups) as a single relation with the caller's schema: one file
+    * listing, no schema inference job and no per-location union, so the
+    * cost of building the relation does not grow with the location count.
+    * Concrete here because both shipped implementations are parquet; a
+    * table format with its own snapshot reader (Iceberg) overrides it.
+    */
+  def readAll(spark: SparkSession, locations: Seq[String],
+              schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(locations: _*)
 
   /** True iff a COMPLETE write exists at the location (atomicity marker). */
   def committed(location: String): Boolean

@@ -9,9 +9,14 @@ import graft.index.PackedIndex
   * map, keyed by a stats.json content token.
   *
   * Why: every [[Wand.prepare]] batch otherwise runs one pushdown-filtered
-  * Spark scan of the df table — correct, but a fixed per-batch floor
-  * (~0.1-0.3 s of job scheduling) that dominates high-QPS serving of small
-  * batches. For vocabularies up to [[MaxCachedTerms]] the whole map is
+  * Spark scan of the df table — correct, but one more Spark job on a
+  * per-batch floor that already dominates small batches. Measured with
+  * `perfbench/run.py --workload ingest_serve --trace 1` (4-core VM,
+  * local[4], 2,000-3,250 pages, k = 10, cache warm): a single-query
+  * `Wand.search` runs 2 jobs with ~140-150 ms of driver time in ~212 ms
+  * wall, a `Bm25TopKPlan.search` 3 jobs in ~230-270 ms — about 70 ms of
+  * driver time per job, which is what the df scan would add to each batch.
+  * For vocabularies up to [[MaxCachedTerms]] the whole map is
   * collected ONCE per index version and term lookups become driver-local;
   * larger vocabularies fall back to the per-batch scan (recorded so the
   * size check itself isn't repeated per batch).
